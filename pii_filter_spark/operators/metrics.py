@@ -3,9 +3,11 @@
 The reference streams per-stage SSE log events per request
 (/root/reference/src/api/proxy.py:97-190); at table scale the analogue is
 a per-partition metrics rollup written next to each snapshot. Computed as
-ONE distributed aggregation over the written output (groupBy part_id), not
-driver-side iteration; drop-reason counts aggregate via explode +
-map_from_entries so the map stays columnar end-to-end.
+ONE distributed aggregation over the written output (groupBy part_id, one
+exchange, no join), not driver-side iteration. Drop reasons are counted
+inside that aggregation with one `count_if(array_contains(...))` per
+core.quality.RULE_ORDER code — each code appears at most once per row —
+and folded into a map that keeps only the codes that occurred.
 """
 
 from __future__ import annotations
@@ -13,45 +15,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-METRICS_COLS = (
-    "part_id", "rows_in", "rows_kept", "rows_dropped", "scrub_count",
-    "drop_reason_counts",
-)
+from ..core.quality import RULE_ORDER
 
 
 def partition_metrics(df: DataFrame, part_col: str = "part_id") -> DataFrame:
     """Per-partition rollup: (part_id, rows_in, rows_kept, rows_dropped,
     scrub_count, drop_reason_counts map<string,long>)."""
-    base = df.groupBy(part_col).agg(
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.col("keep").cast("long")).alias("rows_kept"),
-        F.sum((~F.col("keep")).cast("long")).alias("rows_dropped"),
-        F.sum(F.col("scrub_count").cast("long")).alias("scrub_count"),
+    keep = F.col("keep")
+    reasons = F.map_from_arrays(
+        F.array(*[F.lit(code) for code in RULE_ORDER]),
+        F.array(*[
+            F.count_if(F.array_contains("drop_reasons", code))
+            for code in RULE_ORDER
+        ]),
     )
-    reasons = (
-        df.select(part_col, F.explode_outer("drop_reasons").alias("reason"))
-        .where(F.col("reason").isNotNull())
-        .groupBy(part_col, "reason")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy(part_col)
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("reason", "cnt")))
-            ).alias("drop_reason_counts")
-        )
-    )
-    return base.join(reasons, part_col, "left")
-
-
-def global_metrics(df: DataFrame) -> dict:
-    row = df.agg(
+    return df.groupBy(part_col).agg(
         F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.col("keep").cast("long")).alias("rows_kept"),
+        F.count_if(keep).alias("rows_kept"),
+        F.count_if(~keep).alias("rows_dropped"),
         F.sum(F.col("scrub_count").cast("long")).alias("scrub_count"),
-    ).collect()[0]
-    return {
-        "rows_in": row["rows_in"],
-        "rows_kept": row["rows_kept"] or 0,
-        "rows_dropped": row["rows_in"] - (row["rows_kept"] or 0),
-        "scrub_count": row["scrub_count"] or 0,
-    }
+        F.map_filter(reasons, lambda _, n: n > 0).alias("drop_reason_counts"),
+    )

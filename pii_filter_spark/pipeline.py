@@ -18,8 +18,12 @@ asserts equality).
 Scale notes: the whole hot path is one scan → two UDF projections → one
 partitioned write; no joins or aggregations touch the MB-scale `bytes`
 column. Metrics aggregate from the written output (also validating the
-persisted data). `batch_parts` bounds the blast radius of a failure; at
-10^12 rows you'd size num_parts so one partition ≈ one Iceberg file group.
+persisted data): each commit reads back only its own batch's part_id=K
+directories, with the schema of the frame it just wrote, and rolls them
+up in one aggregation — so per-batch commit cost is independent of how
+much of the table is already committed. `batch_parts` bounds the blast
+radius of a failure; at 10^12 rows you'd size num_parts so one
+partition ≈ one Iceberg file group.
 """
 
 from __future__ import annotations
@@ -114,9 +118,10 @@ def run_pipeline(
         out.write.mode("overwrite").partitionBy(PART_COL).parquet(output_path)
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
-        # metrics from the PERSISTED batch (read-back validates the write)
-        written = table_io.read_table(spark, output_path).where(
-            F.col(PART_COL).isin(batch)
+        # metrics from the PERSISTED batch (read-back validates the write);
+        # only this batch's part directories are listed and read
+        written = table_io.read_partitions(
+            spark, output_path, PART_COL, batch, out.schema
         )
         mrows = {r[PART_COL]: r.asDict() for r in partition_metrics(written).collect()}
         for p in batch:

@@ -1,17 +1,17 @@
-"""TableIO seam: Iceberg when the catalog jars are present, parquet+manifest
-otherwise.
+"""TableIO seam: parquet directories plus a JSON manifest.
 
-The production target is an Iceberg table (north rule / input_hint); this
-sandbox ships no Iceberg runtime jars, so the default engine is a
+The production target is an Iceberg table (north rule / input_hint). No
+Iceberg runtime jars ship with the project, so every table is a
 parquet-directory table with an explicit JSON manifest directory that gives
 us the two Iceberg behaviours the pipeline depends on:
   * snapshot-ish atomicity — output partitions land under part_id=K
     directories and only count once their manifest entry exists;
   * metadata for checkpoint/resume — the manifest doubles as the
-    completed-partition set (operators/checkpoint.py).
+    completed-partition set (completed_part_ids).
 
-Keeping reads/writes behind this seam means swapping in
-`spark.read.format("iceberg")` is a config change, not a code change.
+Reads, snapshot writes and the manifest live behind this seam; the one
+other place that knows the table is parquet is the partitioned batch write
+in `pipeline.run_pipeline`.
 """
 
 from __future__ import annotations
@@ -21,22 +21,7 @@ import os
 from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True only if the Iceberg runtime is actually on the JVM classpath.
-
-    NB: `spark._jvm.org.apache.iceberg.Table` is NOT a valid probe — py4j
-    resolves missing classes to a lazy JavaPackage without raising, so it
-    reports true on any classpath. Class.forName forces real loading.
-    """
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.catalog.Catalog"
-        )
-        return True
-    except Exception:
-        return False
+from pyspark.sql.types import StructType
 
 
 def read_table(
@@ -62,6 +47,27 @@ def read_table(
         files = [os.path.join(path, f) for f in snaps[snapshot_id]["files"]]
         return spark.read.parquet(*files)
     return spark.read.parquet(path)
+
+
+def read_partitions(
+    spark: SparkSession,
+    path: str,
+    part_col: str,
+    part_ids: List[int],
+    schema: StructType,
+) -> DataFrame:
+    """Read only the `part_col=K` directories of `part_ids` under `path`.
+
+    Lists just those directories (`basePath` keeps `part_col` a column) and
+    takes `schema` instead of inferring it from footers, so the cost
+    follows the parts read, not the table. A part with no rows has no
+    directory and contributes nothing.
+    """
+    dirs = [os.path.join(path, f"{part_col}={p}") for p in part_ids]
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", path).parquet(*dirs)
 
 
 def write_table(

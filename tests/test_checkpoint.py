@@ -1,5 +1,8 @@
 """Resume-after-kill: identical output + idempotent metrics (FIXTURES.md B3)."""
 
+import os
+from urllib.parse import urlparse
+
 import pytest
 
 from pii_filter_spark.pipeline import run_pipeline
@@ -58,3 +61,60 @@ def test_rerun_on_complete_output_is_noop(spark, tmp_path_factory):
     fp1 = _table_fingerprint(spark, out)
     assert run_pipeline(spark, inp, out, num_parts=4, batch_parts=2) == []
     assert _table_fingerprint(spark, out) == fp1
+
+
+def test_readback_reads_only_batch_parts(spark, tmp_path_factory, monkeypatch):
+    """More parts than rows: empty parts commit zero entries, each batch's
+    read-back touches only its own part_id=K directories, and the manifest
+    equals one computed from a whole-table read-back."""
+    from pyspark.sql import functions as F
+
+    root = tmp_path_factory.mktemp("scope")
+    inp = str(root / "input")
+    write_input_table(spark, inp, 20, seed=SEED, num_partitions=2)
+    parts, batch_parts = 40, 8
+
+    reads = []
+    batch_reader = table_io.read_partitions
+
+    def recording_reader(spark_, path, part_col, part_ids, schema):
+        df = batch_reader(spark_, path, part_col, part_ids, schema)
+        reads.append((path, list(part_ids), df.inputFiles()))
+        return df
+
+    out = str(root / "out")
+    monkeypatch.setattr(table_io, "read_partitions", recording_reader)
+    run_pipeline(spark, inp, out, num_parts=parts, batch_parts=batch_parts)
+
+    def whole_table_reader(spark_, path, part_col, part_ids, schema):
+        return table_io.read_table(spark_, path).where(F.col(part_col).isin(part_ids))
+
+    ref = str(root / "ref")
+    monkeypatch.setattr(table_io, "read_partitions", whole_table_reader)
+    run_pipeline(spark, inp, ref, num_parts=parts, batch_parts=batch_parts)
+
+    assert len(reads) == parts // batch_parts
+    for path, part_ids, files in reads:
+        assert path == out
+        dirs = {p: os.path.join(out, f"part_id={p}") + os.sep for p in part_ids}
+        local = [urlparse(f).path for f in files]
+        assert all(any(f.startswith(d) for d in dirs.values()) for f in local)
+        assert {p for p, d in dirs.items() if os.path.isdir(d)} == {
+            p for p, d in dirs.items() if any(f.startswith(d) for f in local)
+        }
+
+    def payloads(path):
+        return {e["part_id"]: {k: v for k, v in e.items() if k != "wall_ms"}
+                for e in table_io.read_manifest(path)}
+
+    manifest = payloads(out)
+    assert set(manifest) == set(range(parts))
+    empty = [p for p in range(parts)
+             if not os.path.isdir(os.path.join(out, f"part_id={p}"))]
+    assert len(empty) >= parts - 20
+    zero = {"rows_in": 0, "rows_kept": 0, "rows_dropped": 0, "scrub_count": 0,
+            "drop_reason_counts": {}}
+    for p in empty:
+        assert {k: manifest[p][k] for k in zero} == zero, p
+    assert sum(e["rows_in"] for e in manifest.values()) == 20
+    assert manifest == payloads(ref)

@@ -1,11 +1,14 @@
 """End-to-end pipeline: input table → scrub+quality → partitioned output +
 manifest, with the per-row invariants of FIXTURES.md B3."""
 
+from collections import Counter
+
 import numpy as np
 import pytest
 
 from pii_filter_spark.images import decode_image, psnr
 from pii_filter_spark.operators.image_stage import image_features, verify_images
+from pii_filter_spark.operators.metrics import partition_metrics
 from pii_filter_spark.pipeline import run_pipeline
 from pii_filter_spark.sources import table_io
 from pii_filter_spark.sources.synth import write_input_table
@@ -73,6 +76,36 @@ def test_manifest_metrics_idempotent_and_consistent(spark, io_paths):
     assert kept + dropped == N
     df = table_io.read_table(spark, out)
     assert kept == df.where("keep").count()
+
+
+def test_partition_metrics_one_exchange_and_python_counts(spark, io_paths):
+    """The rollup is one groupBy: exactly one Exchange and no join in the
+    final adaptive plan; its rows equal a pure-Python count."""
+    _, out = io_paths
+    df = table_io.read_table(spark, out)
+    got = partition_metrics(df)
+    rows = got.collect()
+    plan = got._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+
+    src = df.select("part_id", "keep", "scrub_count", "drop_reasons").collect()
+    assert any(len(r["drop_reasons"]) >= 2 for r in src)  # several reasons/row
+    want = {}
+    for p in {r["part_id"] for r in src}:
+        part = [r for r in src if r["part_id"] == p]
+        want[p] = (
+            len(part),
+            sum(r["keep"] for r in part),
+            sum(not r["keep"] for r in part),
+            sum(r["scrub_count"] for r in part),
+            dict(Counter(c for r in part for c in r["drop_reasons"])),
+        )
+    assert {
+        r["part_id"]: (r["rows_in"], r["rows_kept"], r["rows_dropped"],
+                       r["scrub_count"], dict(r["drop_reason_counts"]))
+        for r in rows
+    } == want
 
 
 def test_verify_images_stage(spark, io_paths):
