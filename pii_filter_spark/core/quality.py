@@ -5,15 +5,13 @@ adapted to image-caption text, with caption-scale thresholds. No reference
 counterpart; the reference's analogue is its cheap-first stage ordering
 (run cheap filters before expensive stages — README.md:1264).
 
-Every rule is defined twice with IDENTICAL semantics:
-  * here in pure Python (`quality_signals` / `drop_reasons`) — used by the
-    fixture oracle and by unit tests;
-  * in operators/quality_stage.py as native Catalyst column expressions
-    (JVM whole-stage codegen, no Python in the hot path) for the rules that
-    are expressible, plus one Arrow-batched pandas UDF for langid+perplexity.
-tests/test_quality.py asserts the two implementations agree row-for-row.
+Every rule is defined once, here in pure Python (`quality_signals` /
+`drop_reasons`). The Spark caption stage (operators/fused.py) runs these
+functions inside its pandas UDFs, and the quality_full fixture oracle
+computes its expected rows with them. tests/test_quality.py checks them
+against the independent test reference (tests/oracle/reference_semantics.py).
 
-Tokenization contract (shared with the SQL/Catalyst mirror):
+Tokenization contract:
 tokens = non-empty pieces of trim(text) split on runs of whitespace.
 Lines  = text split on "\n"; only lines with non-empty strip() count.
 

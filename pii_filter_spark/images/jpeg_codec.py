@@ -1,9 +1,8 @@
 """Pure-Python/numpy baseline JPEG (JFIF) codec — real ITU T.81 bytes.
 
-Round-3 VERDICT "What's missing" #3: the PSNR>=40 lossy invariant
-(BASELINE.md target) previously ran only on the deterministic JQD1
-stand-in. This module implements the actual baseline sequential DCT
-JPEG from the public spec (ITU-T T.81 / JFIF 1.02), dependency-free:
+The PSNR>=40 lossy invariant (BASELINE.md target) runs on this codec:
+the actual baseline sequential DCT JPEG from the public spec (ITU-T
+T.81 / JFIF 1.02), dependency-free:
 
   encoder  4:4:4, interleaved single scan, Annex K quantization tables
            scaled by the IJG quality curve, Annex K Huffman tables;
@@ -58,7 +57,6 @@ ZIGZAG = np.array(
      35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
      58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63],
     dtype=np.int64)
-_UNZIGZAG = np.argsort(ZIGZAG)
 
 # Annex K Huffman specs: (BITS[1..16], HUFFVAL)
 DC_LUM_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]

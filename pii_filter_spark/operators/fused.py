@@ -1,20 +1,25 @@
-"""Fused quality + scrub stage: ONE Arrow round-trip per caption batch.
+"""Caption stage: quality filter + PII/toxicity scrub as pandas UDFs.
 
-quality_stage + scrub_stage are kept as composable operators, but chaining
-them creates two ArrowEvalPython stages — two Python workers per task and
-two Arrow (de)serializations of the caption column. And the native
-higher-order-function rule expressions (filter/transform lambdas) are
-interpreted JVM-side; measured at 32 local cores they add ~40% wall time
-from allocation contention, while the pure-Python rule evaluator does the
-same rows at ~60k rows/s/core. On a 10^12-row table the scalable shape is:
-JVM does scan + write, Python (which parallelizes linearly across workers)
-does all per-row logic in one vectorized batch stage.
+The single Spark implementation of the caption rules. Two batch functions
+over the frozen core build every column: `_quality` runs language-ID,
+perplexity and the heuristic rules (core/quality.drop_reasons) per caption,
+`_scrub` runs detection, precedence resolution and one substitution
+(core/detect.scrub_batch). Each pandas UDF below is one Arrow round-trip
+that ships only the caption column (Catalyst prunes the MB-scale `bytes`
+column away from its projection):
 
-`fused_quality_scrub` therefore computes lang, ppl, drop_reasons, keep,
-scrubbed_caption and pii_masked in a single pandas UDF built on the frozen
-core semantics (core/quality.py, core/detect.py). Output columns and
-values are identical to scrub_stage(quality_stage(df)) — asserted by
-tests/test_spark_stages.py::test_fused_stage_equals_chained_stages.
+  quality_udf  lang, ppl, drop_reasons, keep
+  scrub_udf    scrubbed_caption, pii_masked
+  fused_udf    all six in one pass — the production hot path
+
+`fused_quality_scrub` is the pipeline's stage: chaining
+scrub_stage(quality_stage(df)) gives the same columns and values
+(tests/test_spark_stages.py::test_fused_stage_equals_chained_stages) but
+pays two Python stages, two worker processes per task and two Arrow
+(de)serializations of the caption column.
+
+Pattern, dictionary and model state compiles once per Python worker at
+module import, the moral equivalent of a broadcast variable.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     DoubleType,
+    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -36,22 +42,35 @@ from ..core.detect import scrub_batch
 from ..core.langid import detect_language
 from ..core.perplexity import perplexity
 from ..core.quality import drop_reasons
-from .scrub import MAPPING_TYPE
 
-_FUSED_TYPE = StructType(
+MAPPING_TYPE = StructType(
+    [
+        StructField("placeholder", StringType()),
+        StructField("original_value", StringType()),
+        StructField("type", StringType()),
+        StructField("span_start", IntegerType()),
+        StructField("span_end", IntegerType()),
+    ]
+)
+
+_QUALITY_TYPE = StructType(
     [
         StructField("lang", StringType()),
         StructField("ppl", DoubleType()),
         StructField("drop_reasons", ArrayType(StringType())),
         StructField("keep", BooleanType()),
+    ]
+)
+_SCRUB_TYPE = StructType(
+    [
         StructField("scrubbed_caption", StringType()),
         StructField("pii_masked", ArrayType(MAPPING_TYPE)),
     ]
 )
+_FUSED_TYPE = StructType(_QUALITY_TYPE.fields + _SCRUB_TYPE.fields)
 
 
-@pandas_udf(_FUSED_TYPE)
-def fused_udf(captions: pd.Series) -> pd.DataFrame:
+def _quality(captions: pd.Series) -> dict:
     langs, ppls, reasons = [], [], []
     for t in captions:
         if isinstance(t, str):
@@ -61,29 +80,57 @@ def fused_udf(captions: pd.Series) -> pd.DataFrame:
         langs.append(lg)
         ppls.append(pp)
         reasons.append(drop_reasons(t if isinstance(t, str) else None, lg, pp))
+    return {
+        "lang": langs,
+        "ppl": ppls,
+        "drop_reasons": reasons,
+        "keep": [len(r) == 0 for r in reasons],
+    }
+
+
+def _scrub(captions: pd.Series) -> dict:
     scrubbed = scrub_batch(captions)
-    return pd.DataFrame(
-        {
-            "lang": langs,
-            "ppl": ppls,
-            "drop_reasons": reasons,
-            "keep": [len(r) == 0 for r in reasons],
-            "scrubbed_caption": [r[0] for r in scrubbed],
-            "pii_masked": [r[1] for r in scrubbed],
-        }
-    )
+    return {
+        "scrubbed_caption": [r[0] for r in scrubbed],
+        "pii_masked": [r[1] for r in scrubbed],
+    }
+
+
+@pandas_udf(_QUALITY_TYPE)
+def quality_udf(captions: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame(_quality(captions))
+
+
+@pandas_udf(_SCRUB_TYPE)
+def scrub_udf(captions: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame(_scrub(captions))
+
+
+@pandas_udf(_FUSED_TYPE)
+def fused_udf(captions: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame({**_quality(captions), **_scrub(captions)})
+
+
+def _expand(df: DataFrame, udf, caption_col: str) -> DataFrame:
+    """Adds one column per field of `udf`'s struct result, plus
+    scrub_count when the struct carries pii_masked."""
+    out = df.withColumn("_fx", udf(F.col(caption_col)))
+    cols = {n: F.col(f"_fx.{n}") for n in udf.returnType.fieldNames()}
+    if "pii_masked" in cols:
+        cols["scrub_count"] = F.size(cols["pii_masked"])
+    return out.withColumns(cols).drop("_fx")
+
+
+def quality_stage(df: DataFrame, caption_col: str = "caption") -> DataFrame:
+    """Adds lang, ppl, drop_reasons (ordered array<string>) and keep."""
+    return _expand(df, quality_udf, caption_col)
+
+
+def scrub_stage(df: DataFrame, caption_col: str = "caption") -> DataFrame:
+    """Adds scrubbed_caption, pii_masked, scrub_count columns."""
+    return _expand(df, scrub_udf, caption_col)
 
 
 def fused_quality_scrub(df: DataFrame, caption_col: str = "caption") -> DataFrame:
     """Equivalent of scrub_stage(quality_stage(df)) in one Python stage."""
-    out = df.withColumn("_fx", fused_udf(F.col(caption_col)))
-    return (
-        out.withColumn("lang", F.col("_fx.lang"))
-        .withColumn("ppl", F.col("_fx.ppl"))
-        .withColumn("drop_reasons", F.col("_fx.drop_reasons"))
-        .withColumn("keep", F.col("_fx.keep"))
-        .withColumn("scrubbed_caption", F.col("_fx.scrubbed_caption"))
-        .withColumn("pii_masked", F.col("_fx.pii_masked"))
-        .withColumn("scrub_count", F.size("pii_masked"))
-        .drop("_fx")
-    )
+    return _expand(df, fused_udf, caption_col)

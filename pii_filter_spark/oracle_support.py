@@ -549,10 +549,10 @@ def emb_near_pairs_lsh_sql(sf_dir: str, threshold: float = 0.85,
 
 
 def quality_full_sql(sf_dir: str, pii_clauses: Sequence[str]) -> str:
-    """q_quality_full expected output via the pure-Python rule mirror
-    (core/quality.drop_reasons) that tests already pin row-equal to the
-    JVM-native rule columns, plus the same langid/perplexity models the
-    UDF calls."""
+    """q_quality_full expected output from the frozen core rules
+    (core/quality.drop_reasons) and langid/perplexity models, computed
+    in plain Python without Spark; tests/test_spark_stages.py pins the
+    Spark stage row-equal to the independent test reference."""
     from .core.langid import detect_language
     from .core.perplexity import perplexity
     from .core.quality import drop_reasons

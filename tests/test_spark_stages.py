@@ -6,8 +6,7 @@ FIXTURES.md B3, exercised through the real Arrow-batched plan.
 import pandas as pd
 import pytest
 
-from pii_filter_spark.operators.quality_stage import quality_stage
-from pii_filter_spark.operators.scrub import scrub_stage
+from pii_filter_spark.operators.fused import quality_stage, scrub_stage
 from pii_filter_spark.sources.synth import gen_pandas
 from tests.oracle import reference_semantics as oracle
 
